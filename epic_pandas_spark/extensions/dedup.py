@@ -22,7 +22,6 @@ word splitting — no Python in the hot path anywhere.
 
 from __future__ import annotations
 
-import warnings
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
@@ -348,47 +347,6 @@ def minhash_signatures(words: DataFrame, n_hashes: int = 32, seed: int = 7) -> D
     return exploded.groupBy("id").agg(*aggs)
 
 
-def tune_lsh_bands(
-    threshold: float,
-    n_hashes: int = 32,
-    fp_weight: float = 0.5,
-    fn_weight: float = 0.5,
-) -> int:
-    """Pick the LSH band count minimizing the weighted false-positive +
-    false-negative mass of the S-curve — the standard optimal-parameter
-    search (Leskovec/Rajaraman/Ullman, *Mining of Massive Datasets*
-    §3.4.3; same criterion as datasketch's ``_optimal_param``).
-
-    For ``bands`` bands of ``r = n_hashes // bands`` rows, a pair with
-    true Jaccard ``s`` becomes a candidate with probability
-    ``1 - (1 - s^r)^bands``. FP mass = ∫₀ᵗ P(s) ds (work wasted
-    verifying sub-threshold pairs), FN mass = ∫ₜ¹ (1 - P(s)) ds (recall
-    lost BEFORE the exact-verification stage can save it). Every
-    divisor of n_hashes is scored by midpoint quadrature; ties break to
-    fewer bands (cheaper candidate join). Driver-side arithmetic over
-    ≤ n_hashes options — costs nothing at any scale."""
-    if not 0 < threshold < 1:
-        raise ValueError("threshold must be in (0, 1)")
-    steps = 1000
-    best_bands, best_err = None, None
-    for bands in range(1, n_hashes + 1):
-        if n_hashes % bands:
-            continue
-        r = n_hashes // bands
-        fp = fn = 0.0
-        for i in range(steps):
-            s = (i + 0.5) / steps
-            p = 1.0 - (1.0 - s**r) ** bands
-            if s < threshold:
-                fp += p / steps
-            else:
-                fn += (1.0 - p) / steps
-        err = fp_weight * fp + fn_weight * fn
-        if best_err is None or err < best_err - 1e-12:
-            best_bands, best_err = bands, err
-    return best_bands
-
-
 def bands_for_recall(
     threshold: float,
     n_hashes: int = 32,
@@ -400,14 +358,13 @@ def bands_for_recall(
     always verifies): false positives only cost verification work while
     false negatives are unrecoverable, so minimize candidate volume
     subject to a recall floor rather than balancing the two error
-    masses like :func:`tune_lsh_bands`. Fewer bands = longer rows =
-    steeper curve = fewer sub-threshold candidates, so the first
-    divisor meeting the floor is also the precision-maximal one.
+    masses. Fewer bands = longer rows = steeper curve = fewer
+    sub-threshold candidates, so the first divisor meeting the floor is
+    also the precision-maximal one.
     Falls back to ``n_hashes`` bands (r=1: collision probability
     ``1-(1-s)^n``) when no divisor meets the floor. At τ=0.8, 32
-    hashes, the default floor derives bands=16 — the hand-tuned value
-    the flagship pipeline shipped with, now computed from the
-    threshold. Driver-side arithmetic; costs nothing at any scale."""
+    hashes, the default floor derives bands=16. Driver-side arithmetic;
+    costs nothing at any scale."""
     if not 0 < threshold < 1:
         raise ValueError("threshold must be in (0, 1)")
     if not 0 < min_recall < 1:
@@ -428,7 +385,7 @@ def minhash_lsh_pairs(
     threshold: float,
     shingle_words: int = 3,
     n_hashes: int = 32,
-    bands: int | str = 16,
+    bands: int | None = None,
     seed: int = 7,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs, verified: band the signature into
@@ -441,20 +398,12 @@ def minhash_lsh_pairs(
     shingle sets always collide in every band, so recall at threshold→1.0
     is exactly 1.
 
-    ``bands="auto"`` picks the band count from the threshold via
-    :func:`tune_lsh_bands` (S-curve FP+FN minimization) — high
-    thresholds get fewer, longer bands (cheap and precise), low
-    thresholds more, shorter ones (recall before verification).
-    ``bands="auto-recall"`` uses :func:`bands_for_recall` instead —
-    fewest bands with ≥99.9% collision probability at the threshold,
-    the right objective HERE because the exact-Jaccard verification
-    below makes false positives harmless."""
-    if bands == "auto":
-        bands = tune_lsh_bands(threshold, n_hashes)
-    elif bands == "auto-recall":
-        bands = bands_for_recall(threshold, n_hashes)
-    words, candidates = _lsh_words_and_candidates(
-        df, text_col, id_col, shingle_words, n_hashes, bands, seed
+    ``bands=None`` (default) derives the band count from the threshold
+    via :func:`bands_for_recall` — fewest bands with ≥99.9% collision
+    probability at the threshold, the right objective HERE because the
+    exact-Jaccard verification below makes false positives harmless."""
+    words, candidates, _ = _lsh_words_and_candidates(
+        df, text_col, id_col, threshold, shingle_words, n_hashes, bands, seed
     )
     return _verify_jaccard(words, candidates, threshold)
 
@@ -463,17 +412,19 @@ def _lsh_words_and_candidates(
     df: DataFrame,
     text_col: str,
     id_col: str,
+    threshold: float,
     shingle_words: int,
     n_hashes: int,
-    bands,
+    bands: int | None,
     seed: int,
 ) -> tuple:
     """Shared candidate-generation pipeline of :func:`minhash_lsh_pairs`
-    and its instrumentation twin: returns (words, candidates) where
-    ``words`` is the checkpointed (id, shingle-set) table and
-    ``candidates`` the distinct banded pair set pre-verification.
-    ``bands`` must already be resolved to an int (callers handle the
-    "auto"/"auto-recall" modes, which need the threshold)."""
+    and its instrumentation twin: returns (words, candidates, bands) where
+    ``words`` is the checkpointed (id, shingle-set) table, ``candidates``
+    the distinct banded pair set pre-verification and ``bands`` the band
+    count used (``None`` resolved via :func:`bands_for_recall`)."""
+    if bands is None:
+        bands = bands_for_recall(threshold, n_hashes)
     if n_hashes % bands != 0:
         raise ValueError("bands must divide n_hashes")
     r = n_hashes // bands
@@ -497,7 +448,7 @@ def _lsh_words_and_candidates(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    return words, candidates
+    return words, candidates, bands
 
 
 def _verify_jaccard(words: DataFrame, candidates: DataFrame, threshold: float) -> DataFrame:
@@ -523,7 +474,7 @@ def minhash_lsh_candidate_stats(
     threshold: float,
     shingle_words: int = 3,
     n_hashes: int = 32,
-    bands: int | str = 16,
+    bands: int | None = None,
     seed: int = 7,
 ) -> dict:
     """Instrumentation twin of :func:`minhash_lsh_pairs` (the LSH analog of
@@ -535,13 +486,9 @@ def minhash_lsh_candidate_stats(
     artifacts attribute superlinear wall growth to duplicate-pair density
     in-data (pairs can legitimately grow faster than rows in a corpus
     whose duplicate clusters grow with it) instead of arguing about it."""
-    if bands == "auto":
-        bands = tune_lsh_bands(threshold, n_hashes)
-    elif bands == "auto-recall":
-        bands = bands_for_recall(threshold, n_hashes)
     n_rows = df.count()
-    words, candidates = _lsh_words_and_candidates(
-        df, text_col, id_col, shingle_words, n_hashes, bands, seed
+    words, candidates, bands = _lsh_words_and_candidates(
+        df, text_col, id_col, threshold, shingle_words, n_hashes, bands, seed
     )
     candidates = candidates.localCheckpoint(eager=False)  # counted AND verified
     n_docs = words.count()
@@ -550,8 +497,8 @@ def minhash_lsh_candidate_stats(
     return {
         "n_rows": n_rows,
         "n_docs": n_docs,
-        "n_bands": int(bands),
-        "n_band_rows": n_docs * int(bands),
+        "n_bands": bands,
+        "n_band_rows": n_docs * bands,
         "n_candidate_pairs": n_cands,
         "n_verified_pairs": n_verified,
     }
@@ -719,10 +666,11 @@ def simhash_pairs(
     return hamming_pairs(sh, "sh", "id", max_hamming=max_hamming, n_bands=n_bands)
 
 
-# connected_components "auto": edge count at or below which the pair
-# graph is a bounded dim the driver labels directly (16 B/edge -> ~1.6 MB
-# collected at the bound) — the decade below minlabel's 2-tiny-jobs-per-
-# round regime, where job launch latency is the whole cost.
+# connected_components: edge count at or below which the pair graph is a
+# bounded dim the driver labels directly (16 B/edge -> ~1.6 MB collected
+# at the bound). Below it a distributed round's job launches (an eager
+# checkpoint plus a convergence probe, several rounds even on a
+# 256-edge graph) are the whole cost; a union-find takes microseconds.
 _CC_DRIVER_MAX_EDGES = 100_000
 
 
@@ -731,164 +679,61 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 20,
-    on_nonconverged: str = "raise",
-    algorithm: str = "auto",
-    star_threshold: int = 10_000_000,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph → (id, cluster)
     with cluster = min id reachable. The dedup endgame: keep one doc per
     component.
 
-    Two algorithms, identical output:
+    The pair list is checkpointed once and its edge count picks one of
+    two tiers with identical output:
 
-    - ``"minlabel"`` (default): min-label propagation with pointer
-      doubling — each round (1) takes the min label across edges and
-      (2) replaces each node's label with its label's label, the shortcut
-      step that makes convergence O(log diameter) rather than
-      O(diameter), so a 20-round cap covers path graphs of ~2^20 nodes.
-      Keeps the full edge list live every round.
-    - ``"star"``: alternating large-star/small-star edge rewriting
-      (Kiveris et al., "Connected Components in MapReduce and Beyond",
-      SOCC'14) — each round rewrites the edge set itself toward a star
-      per component, so the per-round shuffle SHRINKS as components
-      collapse; converges in O(log n) rounds unconditionally (the
-      paper's Theorem 11 bound is O(log² n) worst-case, O(log n) in
-      practice and on bounded-degeneracy graphs). The better choice when
-      the pair graph is huge but its components are small — the standard
-      near-dup shape.
+    - at or below ``_CC_DRIVER_MAX_EDGES`` edges: the edges are collected
+      and labeled by a driver union-find, returned as one literal frame;
+    - above it (or when an id is null): alternating large-star/small-star
+      edge rewriting (Kiveris et al., "Connected Components in MapReduce
+      and Beyond", SOCC'14) — each round rewrites the edge set itself
+      toward a star per component, so the per-round shuffle SHRINKS as
+      components collapse; converges in O(log n) rounds (the paper's
+      Theorem 11 bound is O(log² n) worst-case, O(log n) in practice and
+      on bounded-degeneracy graphs) — the standard near-dup shape of a
+      huge pair graph with small components.
 
-    Each round shuffles on the node id; `localCheckpoint` truncates the
-    lineage so the plan doesn't grow exponentially across rounds — the
-    standard Spark iterative-algorithm pattern.
+    If the star loop exits via ``max_iterations`` without reaching a
+    fixpoint, the labels would be wrong (unfinished propagation), so it
+    raises RuntimeError."""
+    pairs = pairs.select(id_a, id_b).localCheckpoint(eager=True)
+    if pairs.count() <= _CC_DRIVER_MAX_EDGES:
+        rows = pairs.collect()
+        # null ids never occur in pair graphs; the star tier handles them
+        if not any(r[0] is None or r[1] is None for r in rows):
+            return _connected_components_driver(pairs, rows)
+    return _connected_components_star(pairs, id_a, id_b, max_iterations)
 
-    ``"auto"`` (default) picks by MEASURED crossover, like AQE picks join
-    strategies: the pair list is checkpointed once (both algorithms
-    materialize it anyway) and its count probed — below
-    ``star_threshold`` edges (default 10M ≈ a few hundred MB shuffled per
-    round) minlabel wins, because on small graphs the per-round fixed cost
-    (2 tiny jobs) dominates and star runs more, smaller rounds; above it
-    the shrinking edge set is what keeps the rounds affordable, so star
-    wins. At sf0.1 the flagship pair graph is ~256 edges → minlabel
-    (measured 2.6 s vs star's 3.8 s); a 100 TB corpus' pair graph is
-    billions of edges → star.
 
-    If the loop still exits via `max_iterations` without reaching a
-    fixpoint, the result would be wrong (unfinished propagation), so it
-    raises by default; pass ``on_nonconverged="warn"`` to get the partial
-    labels with a RuntimeWarning instead."""
-    if on_nonconverged not in ("raise", "warn"):
-        raise ValueError("on_nonconverged must be 'raise' or 'warn'")
-    if algorithm not in ("auto", "minlabel", "star"):
-        raise ValueError("algorithm must be 'auto', 'minlabel', or 'star'")
-    if algorithm == "auto":
-        pairs = pairs.select(id_a, id_b).localCheckpoint(eager=True)
-        n_edges = pairs.count()
-        # Third tier (round 11, guide §1.2): below _CC_DRIVER_MAX_EDGES
-        # the edge list is a bounded dim (≤ ~1.6 MB collected), and
-        # minlabel's per-round fixed cost — an eager checkpoint + a
-        # convergence-probe job per round, 2-4 rounds even on a
-        # 256-edge graph — dwarfs the actual work (measured ~3 s of
-        # job round-trips on the flagship sf0.1 pair graph). A driver
-        # union-find labels the same graph in microseconds and returns
-        # one literal frame; output is identical (cluster = min
-        # reachable id, order-independent). The distributed tiers are
-        # untouched above the bound — this is the same probe-and-choose
-        # discipline that already picks minlabel vs star, extended one
-        # decade down. Null ids never occur in pair graphs (both
-        # distributed algorithms would drop them in joins); guarded
-        # anyway by falling through to minlabel.
-        if n_edges <= _CC_DRIVER_MAX_EDGES:
-            rows = pairs.collect()
-            if not any(r[0] is None or r[1] is None for r in rows):
-                parent: dict = {}
+def _connected_components_driver(pairs: DataFrame, rows: list) -> DataFrame:
+    """Union-find over collected edge rows (cluster = min reachable id,
+    independent of edge order) → one literal (id, cluster) frame."""
+    from pyspark.sql.types import StructField, StructType
 
-                def find(x):
-                    root = x
-                    while parent.get(root, root) != root:
-                        root = parent[root]
-                    while parent.get(x, x) != x:
-                        parent[x], x = root, parent[x]
-                    return root
+    parent: dict = {}
 
-                for r in rows:
-                    ra, rb = find(r[0]), find(r[1])
-                    if ra != rb:
-                        parent[max(ra, rb)] = min(ra, rb)
-                nodes = {r[0] for r in rows} | {r[1] for r in rows}
-                out = [(n, find(n)) for n in sorted(nodes)]
-                from pyspark.sql.types import StructField, StructType
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:
+            parent[x], x = root, parent[x]
+        return root
 
-                dt = pairs.schema[id_a].dataType
-                schema = StructType(
-                    [StructField("id", dt), StructField("cluster", dt)]
-                )
-                return pairs.sparkSession.createDataFrame(out, schema)
-        algorithm = "star" if n_edges > star_threshold else "minlabel"
-    if algorithm == "star":
-        return _connected_components_star(
-            pairs, id_a, id_b, max_iterations, on_nonconverged
-        )
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=False)  # re-read every propagation round
-    )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("cluster", F.col("id"))
-    )
-    converged = False
-    for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("cluster").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
-                "id",
-                F.least(F.col("cluster"), F.coalesce(F.col("nmin"), F.col("cluster"))).alias("cluster"),
-                F.col("cluster").alias("old_cluster"),
-            )
-        )
-        # pointer doubling: cluster <- label(cluster). Labels only ever
-        # decrease and every cluster value is itself a node id, so the
-        # left join always resolves; coalesce guards the degenerate case.
-        parent = new_labels.select(
-            F.col("id").alias("pid"), F.col("cluster").alias("pcluster")
-        )
-        new_labels = (
-            new_labels.join(parent, new_labels.cluster == parent.pid, "left")
-            .select(
-                "id",
-                F.coalesce(F.col("pcluster"), F.col("cluster")).alias("cluster"),
-                # carry the pre-round label so the convergence probe below
-                # reads the checkpointed frame directly — no extra join job
-                F.col("old_cluster"),
-            )
-        )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (
-            new_labels.filter(F.col("cluster") != F.col("old_cluster"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels.select("id", "cluster")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        msg = (
-            f"connected_components did not converge within {max_iterations} "
-            "iterations; labels are incomplete. Increase max_iterations."
-        )
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        warnings.warn(msg, RuntimeWarning)
-    return labels
+    for r in rows:
+        ra, rb = find(r[0]), find(r[1])
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    nodes = {r[0] for r in rows} | {r[1] for r in rows}
+    out = [(n, find(n)) for n in sorted(nodes)]
+    dt = pairs.schema.fields[0].dataType
+    schema = StructType([StructField("id", dt), StructField("cluster", dt)])
+    return pairs.sparkSession.createDataFrame(out, schema)
 
 
 def _connected_components_star(
@@ -896,7 +741,6 @@ def _connected_components_star(
     id_a: str,
     id_b: str,
     max_iterations: int,
-    on_nonconverged: str,
 ) -> DataFrame:
     """Alternating large-star/small-star connected components (Kiveris et
     al. SOCC'14). Each round rewrites the edge set:
@@ -912,10 +756,9 @@ def _connected_components_star(
     labels read off directly as (leaf → center) ∪ (center → center).
 
     Scale shape: each round is two groupBy-min shuffles on the node id
-    over the CURRENT edge set — which shrinks as components collapse —
-    vs. minlabel's constant-size edge list every round. Fixpoint is
-    detected by an order-insensitive edge-set checksum (count +
-    sum(xxhash64)), one tiny agg per round."""
+    over the CURRENT edge set, which shrinks as components collapse.
+    Fixpoint is detected by an order-insensitive edge-set checksum
+    (count + sum(xxhash64)), one tiny agg per round."""
     node_ids = pairs.select(F.col(id_a).alias("id")).unionByName(
         pairs.select(F.col(id_b).alias("id"))
     ).distinct().localCheckpoint(eager=False)
@@ -970,23 +813,18 @@ def _connected_components_star(
         )
 
     prev = checksum(edges)
-    converged = False
     for _ in range(max_iterations):
         edges = small_star(large_star(edges)).localCheckpoint(eager=True)
         cur = checksum(edges)
         if cur == prev:
-            converged = True
             break
         prev = cur
-    if not converged:
-        msg = (
-            f"connected_components(algorithm='star') did not reach an edge-set "
-            f"fixpoint within {max_iterations} iterations; labels are "
-            "incomplete. Increase max_iterations."
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge (no edge-set fixpoint) "
+            f"within {max_iterations} iterations; labels are incomplete. "
+            "Increase max_iterations."
         )
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        warnings.warn(msg, RuntimeWarning)
     # fixpoint edge set is a union of min-rooted stars: (leaf a → center b)
     leaf_labels = edges.select(
         F.col("a").alias("id"), F.col("b").alias("cluster")

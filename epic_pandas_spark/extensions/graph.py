@@ -33,7 +33,7 @@ def pagerank(
     edge list first. Self-loops are dropped; parallel edges collapse.
 
     Iteration strategy is picked by the MEASURED node count (the same
-    probe-and-choose discipline as connected_components' ``auto``): at or
+    probe-and-choose discipline as connected_components' tiers): at or
     below ``checkpoint_threshold`` nodes the whole iteration stays ONE
     lazy plan — the rank table is broadcast-sized, AQE turns every
     per-round join into a broadcast join, and the n_iter-deep plan

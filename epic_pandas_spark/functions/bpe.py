@@ -73,47 +73,37 @@ def _apply_merge_udf(a: str, b: str):
     return apply
 
 
+# distinct-word count at or below which the merge iterations run on the
+# driver over the collected (word, count) table; above it the table may
+# not fit the driver and the Spark iteration loop runs instead
+_LOCAL_VOCAB_MAX_WORDS = 2_000_000
+
+
 def bpe_train(
     df: DataFrame,
     text_col: str,
     n_merges: int = 50,
-    mode: str = "auto",
-    local_vocab_threshold: int = 2_000_000,
 ) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merges from the corpus; returns the ordered
     merge list [(left, right), ...]. Stops early when no adjacent pair
     occurs twice (nothing left worth merging).
 
-    ``mode``:
-
-    - ``"auto"`` (default): one distributed pass reduces the corpus to
-      the (word, count) table; if its size is <= local_vocab_threshold
-      the iterations run driver-side on the collected table (identical
-      semantics — the reference trainer IS the iteration kernel, and the
-      pytest witness proves distributed == reference), else distributed.
-      The corpus-sized work is the same either way; only where the
-      |vocab|-sized loop runs differs, and per-iteration Spark job
-      overhead dominates wall time when the vocab is small.
-    - ``"distributed"``: force the Spark iteration loop (pair-count
-      shuffle + 1-row argmax + Arrow merge per iteration) — required
-      when the distinct-word table itself can't fit on the driver.
-    - ``"local"``: force driver-side iterations (raises nothing; the
-      collect is the caller's responsibility to size)."""
+    One distributed pass reduces the corpus to the (word, count) table.
+    If it has at most ``_LOCAL_VOCAB_MAX_WORDS`` rows the iterations run
+    driver-side on the collected table (identical semantics — the
+    reference trainer IS the iteration kernel, and the pytest witness
+    proves distributed == reference); per-iteration Spark job overhead
+    dominates wall time when the vocab is small. Otherwise the Spark
+    iteration loop runs (pair-count shuffle + 1-row argmax + Arrow merge
+    per iteration). The corpus-sized work is the same either way."""
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
-    if mode not in ("auto", "local", "distributed"):
-        raise ValueError("mode must be auto, local, or distributed")
-    freq_df = None
-    if mode != "distributed":
-        # checkpoint BEFORE the size check so the auto-mode fall-through
-        # to distributed reuses this materialization instead of paying a
-        # second full corpus scan
-        freq_df = _word_freq_table(df, text_col).localCheckpoint(eager=True)
-        if mode == "local" or freq_df.count() <= local_vocab_threshold:
-            freq = {r["w"]: r["cnt"] for r in freq_df.collect()}
-            return _train_on_freq(freq, n_merges)
-    if freq_df is None:
-        freq_df = _word_freq_table(df, text_col)
+    # checkpointed before the size check so the distributed loop reuses
+    # this materialization instead of paying a second full corpus scan
+    freq_df = _word_freq_table(df, text_col).localCheckpoint(eager=True)
+    if freq_df.count() <= _LOCAL_VOCAB_MAX_WORDS:
+        freq = {r["w"]: r["cnt"] for r in freq_df.collect()}
+        return _train_on_freq(freq, n_merges)
     words = freq_df.withColumn(
         "syms", F.split("w", "")
     ).select("cnt", "syms").localCheckpoint(eager=True)
@@ -183,7 +173,7 @@ def _train_on_freq(freq: dict, n_merges: int) -> list[tuple[str, str]]:
     """Iteration kernel over a (word -> count) table: identical counting
     (adjacent pairs weighted by word frequency, overlaps included) and
     tie-breaking (count desc, pair lexicographic asc) as the distributed
-    loop. Used by both mode='local' training and the test reference."""
+    loop. Used by both driver-side training and the test reference."""
     from collections import Counter
 
     words = {w: list(w) for w in freq}

@@ -281,6 +281,16 @@ def _floor_chars(counts: dict, vocab) -> dict:
     return out
 
 
+# distinct-word count above which the EM E-step runs as a Spark job
+# instead of the driver kernel. This is a WALL-time crossover, not a
+# memory fit: the driver kernel is single-core while the Spark E-step
+# spreads the same per-word lattices over every core, and both paths are
+# bit-identical, so past ~50k distinct words the distributed loop wins
+# despite per-round job overhead (sf10: ~500k distinct words x ~12
+# E-step rounds ran single-threaded on the driver).
+_LOCAL_VOCAB_MAX_WORDS = 50_000
+
+
 def unigram_train(
     df: DataFrame,
     text_col: str,
@@ -289,28 +299,17 @@ def unigram_train(
     seed_multiplier: int = 4,
     em_rounds_per_prune: int = 2,
     prune_frac: float = 0.25,
-    mode: str = "auto",
-    local_vocab_threshold: int = 50_000,
     prune: str = "count",
 ) -> dict:
     """Learn a unigram-LM piece vocabulary; returns ``{piece: log_prob}``
     of size ≤ ``vocab_size`` (single characters always survive pruning).
 
-    ``mode`` mirrors :func:`bpe_train`: ``"auto"`` collects the
-    (word, count) table and runs the iteration kernel driver-side when
-    it fits under ``local_vocab_threshold`` (identical semantics — the
-    kernel is the same function the distributed E-step calls, and the
-    integer quantization makes both paths EXACTLY equal); ``"distributed"``
-    forces the Spark EM loop; ``"local"`` forces the driver kernel.
-
-    .. versionchanged:: round 9
-       ``local_vocab_threshold`` default dropped 2M -> 50k: the
-       threshold gates a WALL-time crossover, not a memory fit — the
-       driver kernel is single-core while the Spark E-step spreads the
-       same per-word lattices over every core, and both paths are
-       bit-identical, so past ~50k distinct words the distributed loop
-       wins despite per-round job overhead (sf10: ~500k distinct words
-       x ~12 E-step rounds were single-threaded before this).
+    Like :func:`bpe_train`, the (word, count) table is collected and the
+    iteration kernel runs driver-side when it has at most
+    ``_LOCAL_VOCAB_MAX_WORDS`` rows (identical semantics — the kernel is
+    the same function the distributed E-step calls, and the integer
+    quantization makes both paths EXACTLY equal); above it the Spark EM
+    loop runs.
 
     ``prune='count'`` (default) drops the lowest-expected-mass pieces —
     the standard practical approximation. ``prune='likelihood'`` applies
@@ -320,8 +319,6 @@ def unigram_train(
     round and still never touches the corpus."""
     if vocab_size < 2:
         raise ValueError("vocab_size must be >= 2")
-    if mode not in ("auto", "local", "distributed"):
-        raise ValueError("mode must be auto, local, or distributed")
     if prune not in ("count", "likelihood"):
         raise ValueError("prune must be 'count' or 'likelihood'")
     if em_rounds_per_prune < 1:
@@ -332,9 +329,7 @@ def unigram_train(
     # init: uniform over the seed
     logp = {p: -math.log(len(seed)) for p in seed}
 
-    distributed = mode == "distributed" or (
-        mode == "auto" and freq_df.count() > local_vocab_threshold
-    )
+    distributed = freq_df.count() > _LOCAL_VOCAB_MAX_WORDS
     words_local = (
         None if distributed else [(r["w"], r["cnt"]) for r in freq_df.collect()]
     )

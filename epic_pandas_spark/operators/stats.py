@@ -181,9 +181,8 @@ def quantiles(
     estimates: 1.5-3.4 MB at sf0.1, 16-35 MB at sf1), so small data
     keeps bit-exact oracle parity while the growth trend rides the
     sketch; raise it when bit-exact quantiles matter on bigger scans.
-    Same data-sized auto discipline as
-    ``connected_components(algorithm="auto")`` and ``derive_cms_width``
-    — callers keep one API.
+    Same data-sized discipline as ``connected_components``' tier choice
+    and ``derive_cms_width`` — callers keep one API.
 
     CAVEAT: ``mode="auto"`` trusts Catalyst plan stats, which are only
     calibrated for scan-rooted inputs (parquet footer bytes × pruning).

@@ -4,10 +4,10 @@ a `fraction` column summing to 1.0, optional binning, optional sort, and an
 optional TOTAL row.
 
 Spark-first shape: one hash aggregation (map-side partial + final), then the
-grand total joined back via a broadcast of a 1-row aggregate — NOT an
-empty-partition window, which would funnel the aggregate through a single
-partition. At 100 TB the groupBy output is |distinct values| rows, and the
-total-join is a broadcast nested-loop of one row: no extra shuffle.
+fraction from an empty-partition window over the ALREADY-AGGREGATED
+histogram (see `_with_fraction`). At 100 TB the groupBy output is
+|distinct values| rows, so the window's single-partition exchange moves only
+those rows and the base table is scanned once.
 """
 
 from __future__ import annotations

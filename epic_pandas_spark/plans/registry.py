@@ -1041,25 +1041,20 @@ def q_near_dedup_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     one lazy plan: MinHash-LSH candidates → exact-Jaccard verification
     (τ=0.8) → connected components → keep the min-id doc per cluster →
     survivor accounting. Every stage is the bucketed/scale-safe variant
-    (banded LSH join, pointer-doubled CC); the oracle replays identical
-    semantics in DuckDB with exact all-pairs Jaccard and a recursive-CTE
-    transitive closure — so the approximate candidate generation is held
-    to the exact answer end-to-end, not just per stage. The band count
-    is DERIVED from the threshold (bands="auto-recall": fewest bands
-    with ≥99.9% S-curve collision at τ — which resolves to the 16 the
-    pipeline previously hand-pinned), so changing τ re-tunes the
-    candidate join instead of silently degrading recall."""
+    (banded LSH join; CC labeled on the driver for a small pair graph,
+    by large-star/small-star rounds above it); the oracle replays
+    identical semantics in DuckDB with exact all-pairs Jaccard and a
+    recursive-CTE transitive closure — so the approximate candidate
+    generation is held to the exact answer end-to-end, not just per
+    stage. The band count is DERIVED from the threshold (the default
+    bands=None: fewest bands with ≥99.9% S-curve collision at τ, which
+    resolves to 16 here), so changing τ re-tunes the candidate join
+    instead of silently degrading recall."""
     from epic_pandas_spark.extensions.dedup import connected_components, minhash_lsh_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        docs, "text", "doc_id", threshold=0.8, n_hashes=32, bands="auto-recall"
-    )
-    # algorithm="auto": probes the (checkpointed) pair count and picks
-    # minlabel below 10M edges — per-round fixed cost dominates tiny
-    # graphs — and star's shrinking-shuffle rounds above it (the 100 TB
-    # path); see connected_components' docstring for the measured crossover
-    labels = connected_components(pairs, algorithm="auto")
+    pairs = minhash_lsh_pairs(docs, "text", "doc_id", threshold=0.8, n_hashes=32)
+    labels = connected_components(pairs)
     stats = labels.agg(
         F.count(F.lit(1)).alias("n_dup_members"),
         F.count_distinct("cluster").alias("n_clusters"),
@@ -5387,10 +5382,8 @@ def q_ccnet_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # stage 3: near-dedup keep-best (highest classifier score per cluster)
-    pairs = minhash_lsh_pairs(
-        k2, "text", "doc_id", threshold=0.8, n_hashes=32, bands="auto-recall"
-    )
-    clusters = connected_components(pairs, algorithm="auto").select(
+    pairs = minhash_lsh_pairs(k2, "text", "doc_id", threshold=0.8, n_hashes=32)
+    clusters = connected_components(pairs).select(
         F.col("id").alias("doc_id"), "cluster"
     )
     k3 = keep_best_per_cluster(

@@ -111,7 +111,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     return df
 
 
-def reset_session_state(spark: SparkSession, drain_timeout: float = 10.0) -> None:
+# upper bound on reset_session_state's wait for the cleaner to go idle
+_DRAIN_TIMEOUT_S = 10.0
+
+
+def reset_session_state(spark: SparkSession) -> None:
     """Deterministically release the state a finished query leaves behind
     in a long-lived session — the between-jobs hygiene of a query service.
 
@@ -123,8 +127,8 @@ def reset_session_state(spark: SparkSession, drain_timeout: float = 10.0) -> Non
     manager and on disk; when a GC finally fires, the resulting removal
     storm runs CONCURRENTLY with whatever query is executing. Both effects
     were measured here at several-x per-query inflation late in long
-    sessions (round 11/12 bench maps: the same query 3-6x slower
-    mid-session than solo, the slow set differing run to run).
+    sessions (the same query 3-6x slower mid-session than solo, the slow
+    set differing run to run).
 
     This makes the cleanup deterministic and charges it to no query:
 
@@ -139,37 +143,29 @@ def reset_session_state(spark: SparkSession, drain_timeout: float = 10.0) -> Non
        removal storm races the next query.
 
     The buffer is reached via reflection (it is private); if the Spark
-    version moved it, fall back to GC plus a short fixed sleep — strictly
-    better than the undrained GC this replaces. No data is cached across
-    calls and nothing a future query needs is touched: persisted RDDs,
-    shuffles and broadcasts of FINISHED queries are garbage by definition
-    (a caller holding a live DataFrame reference keeps its state alive —
-    reachable objects are never enqueued)."""
+    version moved it, fall back to GC plus a short fixed sleep. No data
+    is cached across calls and nothing a future query needs is touched:
+    persisted RDDs, shuffles and broadcasts of FINISHED queries are
+    garbage by definition (a caller holding a live DataFrame reference
+    keeps its state alive — reachable objects are never enqueued)."""
     import gc as _pygc
 
-    mode = os.environ.get("EPS_RESET_MODE", "drain")
-    debug = os.environ.get("EPS_RESET_DEBUG") == "1"
-    t0 = time.time()
     sc = spark.sparkContext
     for rdd in dict(sc._jsc.getPersistentRDDs()).values():
         rdd.unpersist(True)  # blocking: no removal racing the next query
-    if mode == "unpersist":
-        return
     _pygc.collect()
     cleaner_opt = sc._jsc.sc().cleaner()
     buf = None
-    if mode == "drain" and not cleaner_opt.isEmpty():
+    if not cleaner_opt.isEmpty():
         try:
             field = cleaner_opt.get().getClass().getDeclaredField("referenceBuffer")
             field.setAccessible(True)
             buf = field.get(cleaner_opt.get())
         except Exception:
             buf = None
-    size0 = buf.size() if buf is not None else -1
     sc._jvm.System.gc()
     if buf is None:
-        if mode == "drain":
-            time.sleep(0.3)
+        time.sleep(0.3)
         return
     # drain: the buffer never reaches 0 (live queries keep reachable
     # references enqueued-in-waiting), so wait for it to go STABLE —
@@ -178,7 +174,7 @@ def reset_session_state(spark: SparkSession, drain_timeout: float = 10.0) -> Non
     # the cleaner is still grinding through the storm).
     last = buf.size()
     stable = 0
-    deadline = time.time() + drain_timeout
+    deadline = time.time() + _DRAIN_TIMEOUT_S
     while time.time() < deadline and stable < 20:
         time.sleep(0.05)
         size = buf.size()
@@ -187,10 +183,3 @@ def reset_session_state(spark: SparkSession, drain_timeout: float = 10.0) -> Non
         else:
             stable = 0
         last = size
-    if debug:
-        import sys
-
-        print(
-            f"reset_session_state: buf {size0} -> {last} in {time.time()-t0:.2f}s",
-            file=sys.stderr,
-        )

@@ -35,13 +35,10 @@ def _collapse(record: dict, collapse_subdict: str | None, sep: str = "_") -> dic
         if value is None:
             continue
         if isinstance(value, dict) and collapse_subdict:
+            # 'joined' and 'multilevel' both flatten to joined names: pandas'
+            # MultiIndex tuple keys have no Spark equivalent (columns are flat)
             for sub, sv in value.items():
-                if sv is None:
-                    continue
-                if collapse_subdict == "joined":
-                    out[f"{field}{sep}{sub}"] = sv
-                else:  # 'multilevel' -> tuple keys in pandas; here joined too,
-                    # since Spark columns are flat (MultiIndex == name parts)
+                if sv is not None:
                     out[f"{field}{sep}{sub}"] = sv
         else:
             out[field] = value

@@ -136,78 +136,50 @@ def test_connected_components_chain(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_long_path_pointer_doubling(spark):
-    """A 40-node path has diameter 39 — plain min-propagation needs ~39
-    rounds, so finishing inside max_iterations=8 proves the pointer-doubling
-    shortcut gives O(log diameter) convergence."""
-    from epic_pandas_spark.extensions.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], "id_a long, id_b long"
-    )
-    got = {
-        r["id"]: r["cluster"]
-        for r in connected_components(
-            pairs, max_iterations=8, algorithm="minlabel"
-        ).collect()
-    }
-    assert got == {i: 0 for i in range(41)}
-
-
-def test_connected_components_nonconverged_raises(spark):
+def test_connected_components_nonconverged_raises(spark, monkeypatch):
     """Exiting via max_iterations with labels still moving must not return
-    silently-wrong clusters (ADVICE r1): default raises, warn-mode warns."""
-    from epic_pandas_spark.extensions.dedup import connected_components
+    silently-wrong clusters: the distributed tier raises."""
+    from epic_pandas_spark.extensions import dedup
 
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", -1)  # force star
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a long, id_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iterations=1, algorithm="minlabel")
-    with pytest.warns(RuntimeWarning, match="did not converge"):
-        connected_components(
-            pairs, max_iterations=1, on_nonconverged="warn", algorithm="minlabel"
-        )
+        dedup.connected_components(pairs, max_iterations=1)
 
 
-def test_connected_components_driver_tier_matches_distributed(spark):
-    """Round 11 added the bounded-dim driver union-find tier under
-    "auto": on a random multi-component graph its labels must equal both
-    distributed algorithms' exactly (cluster = min reachable id)."""
+def test_connected_components_driver_tier_matches_distributed(spark, monkeypatch):
+    """The bounded-dim driver union-find tier: on a random multi-component
+    graph its labels must equal the distributed star tier's exactly
+    (cluster = min reachable id)."""
     import random
 
-    from epic_pandas_spark.extensions.dedup import connected_components
+    from epic_pandas_spark.extensions import dedup
 
     rng = random.Random(11)
     edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    auto = {r["id"]: r["cluster"] for r in connected_components(pairs).collect()}
-    ml = {
-        r["id"]: r["cluster"]
-        for r in connected_components(pairs, algorithm="minlabel").collect()
-    }
-    st = {
-        r["id"]: r["cluster"]
-        for r in connected_components(pairs, algorithm="star").collect()
-    }
-    assert auto == ml == st
+    driver = {r["id"]: r["cluster"] for r in dedup.connected_components(pairs).collect()}
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", -1)
+    star = {r["id"]: r["cluster"] for r in dedup.connected_components(pairs).collect()}
+    assert driver == star
 
 
-def test_connected_components_star_path_graph_round_bound(spark):
+def test_connected_components_star_path_graph_round_bound(spark, monkeypatch):
     """Large-star/small-star on a 2^12-node path graph (diameter 4095)
     must reach the single-star fixpoint within the documented O(log n)
     round budget — max_iterations=16 > log2(4096)=12 — and label every
     node with the component min (VERDICT r2 item 5)."""
-    from epic_pandas_spark.extensions.dedup import connected_components
+    from epic_pandas_spark.extensions import dedup
 
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", -1)  # force star
     n = 1 << 12
     pairs = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
-    labels = connected_components(
-        pairs, max_iterations=16, algorithm="star"
-    )
+    labels = dedup.connected_components(pairs, max_iterations=16)
     agg = labels.agg(
         F.count(F.lit(1)).alias("n"),
         F.count_distinct("id").alias("n_ids"),
@@ -216,10 +188,10 @@ def test_connected_components_star_path_graph_round_bound(spark):
     assert agg["n"] == n and agg["n_ids"] == n and agg["bad"] == 0
 
 
-def test_connected_components_star_matches_minlabel(spark):
-    """Both algorithms must produce identical labels on an irregular
-    multi-component graph (stars, chains, a cycle, isolated pair)."""
-    from epic_pandas_spark.extensions.dedup import connected_components
+def test_connected_components_star_matches_minlabel(spark, monkeypatch):
+    """The star tier must label an irregular multi-component graph
+    (stars, chains, a cycle, isolated pair) exactly as the driver tier."""
+    from epic_pandas_spark.extensions import dedup
 
     edges = (
         [(1, 2), (2, 3), (3, 4)]                 # chain
@@ -229,47 +201,52 @@ def test_connected_components_star_matches_minlabel(spark):
         + [(40, 41), (41, 42), (42, 43), (43, 40), (43, 44)]  # cycle + tail
     )
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    a = {r["id"]: r["cluster"] for r in connected_components(pairs).collect()}
-    b = {
-        r["id"]: r["cluster"]
-        for r in connected_components(pairs, algorithm="star").collect()
-    }
+    a = {r["id"]: r["cluster"] for r in dedup.connected_components(pairs).collect()}
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", -1)
+    b = {r["id"]: r["cluster"] for r in dedup.connected_components(pairs).collect()}
     assert a == b
     assert b[44] == 40 and b[13] == 10 and b[4] == 1
 
 
-def test_connected_components_auto_crossover(spark):
-    """auto mode must dispatch by pair count: below star_threshold it runs
-    minlabel, above it star — identical labels either way (forced by
-    setting the threshold to 0)."""
-    from epic_pandas_spark.extensions.dedup import connected_components
+def test_connected_components_auto_crossover(spark, monkeypatch):
+    """The tier is chosen by the checkpointed edge count against
+    _CC_DRIVER_MAX_EDGES: a graph exactly at the bound stays on the
+    driver, one edge more runs the star rounds — identical labels either
+    way. Null ids fall through to the star tier."""
+    from epic_pandas_spark.extensions import dedup
 
+    star_calls = []
+    star = dedup._connected_components_star
+    monkeypatch.setattr(
+        dedup, "_connected_components_star",
+        lambda *args: star_calls.append(1) or star(*args),
+    )
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
     )
-    small = {
-        r["id"]: r["cluster"]
-        for r in connected_components(pairs, algorithm="auto").collect()
-    }
-    forced_star = {
-        r["id"]: r["cluster"]
-        for r in connected_components(
-            pairs, algorithm="auto", star_threshold=0
-        ).collect()
-    }
-    assert small == forced_star == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-    with pytest.raises(ValueError, match="algorithm"):
-        connected_components(pairs, algorithm="bogus")
+    want = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 3)
+    got = {r["id"]: r["cluster"] for r in dedup.connected_components(pairs).collect()}
+    assert got == want and star_calls == []
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 2)
+    got = {r["id"]: r["cluster"] for r in dedup.connected_components(pairs).collect()}
+    assert got == want and star_calls == [1]
+
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 100)
+    with_null = spark.createDataFrame([(1, 2), (2, None)], "id_a long, id_b long")
+    got = {r["id"]: r["cluster"] for r in dedup.connected_components(with_null).collect()}
+    assert got[1] == 1 and got[2] == 1 and star_calls == [1, 1]
 
 
-def test_connected_components_star_nonconverged_raises(spark):
-    from epic_pandas_spark.extensions.dedup import connected_components
+def test_connected_components_star_nonconverged_raises(spark, monkeypatch):
+    from epic_pandas_spark.extensions import dedup
 
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", -1)  # force star
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], "id_a long, id_b long"
     )
     with pytest.raises(RuntimeError, match="fixpoint"):
-        connected_components(pairs, max_iterations=1, algorithm="star")
+        dedup.connected_components(pairs, max_iterations=1)
 
 
 def test_ivf_knn_recall_vs_bruteforce(spark):
@@ -806,11 +783,11 @@ def test_minhash_lsh_candidate_stats(spark):
     # the identical cluster alone gives C(4,2)=6 verified pairs
     assert stats["n_verified_pairs"] >= 6
 
-    # auto-recall band resolution is recorded in the stats
-    stats_auto = minhash_lsh_candidate_stats(
-        df, "text", "doc_id", threshold=0.8, n_hashes=32, bands="auto-recall"
+    # the default bands=None resolves via bands_for_recall and is recorded
+    stats_default = minhash_lsh_candidate_stats(
+        df, "text", "doc_id", threshold=0.8, n_hashes=32
     )
-    assert stats_auto["n_bands"] == 16  # bands_for_recall(0.8, 32) == 16
+    assert stats_default["n_bands"] == 16  # bands_for_recall(0.8, 32) == 16
 
 
 def test_curation_family_handles_empty_corpus(spark):
@@ -1537,69 +1514,6 @@ def test_remove_repeated_spans_prefilter_parity(spark):
     dup_docs = {d for d, (_, n) in a.items() if n is not None and n > 0}
     assert dup_docs <= cand, "false negative: a rewritten doc was not a candidate"
     assert len(cand) < len(rows), "prefilter pruned nothing on a mostly-unique corpus"
-
-
-def test_tune_lsh_bands_scurve_properties():
-    """JVM-free: the chosen band count must fall monotonically with the
-    threshold (high threshold -> longer bands), beat its divisor
-    neighbors on the weighted S-curve error, and reject bad input."""
-    from epic_pandas_spark.extensions.dedup import tune_lsh_bands
-
-    picks = [tune_lsh_bands(t, 32) for t in (0.3, 0.5, 0.7, 0.9, 0.95)]
-    assert picks == sorted(picks, reverse=True)
-    assert picks[0] > picks[-1]
-
-    def err(bands, t, n=32, steps=2000):
-        r = n // bands
-        fp = fn = 0.0
-        for i in range(steps):
-            s = (i + 0.5) / steps
-            p = 1.0 - (1.0 - s**r) ** bands
-            if s < t:
-                fp += p / steps
-            else:
-                fn += (1.0 - p) / steps
-        return 0.5 * (fp + fn)
-
-    for t in (0.5, 0.8):
-        b = tune_lsh_bands(t, 32)
-        for other in (1, 2, 4, 8, 16, 32):
-            assert err(b, t) <= err(other, t) + 1e-9
-
-    with pytest.raises(ValueError):
-        tune_lsh_bands(0.0)
-    with pytest.raises(ValueError):
-        tune_lsh_bands(1.5)
-
-
-def test_minhash_auto_bands_matches_explicit(spark):
-    """bands="auto" is a parameter pick, not a semantics change: at the
-    same resolved band count the pair set is identical, and the verified
-    output still contains exactly the planted duplicate pairs."""
-    from epic_pandas_spark.extensions.dedup import minhash_lsh_pairs, tune_lsh_bands
-
-    base = [
-        "the quick brown fox jumps over the lazy dog near the river bank",
-        "pack my box with five dozen liquor jugs before noon arrives",
-        "sphinx of black quartz judge my vow said the old librarian",
-    ]
-    rows = []
-    for i, t in enumerate(base):
-        rows.append((i, t))
-        rows.append((100 + i, t))  # exact duplicate -> jaccard 1.0
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    t = 0.8
-    resolved = tune_lsh_bands(t, 32)
-    auto = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs(df, "text", "doc_id", t, bands="auto").collect()
-    }
-    explicit = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs(df, "text", "doc_id", t, bands=resolved).collect()
-    }
-    assert auto == explicit
-    assert {(i, 100 + i) for i in range(3)} <= auto
 
 
 def test_lsh_multiprobe_recall_never_worse(spark):

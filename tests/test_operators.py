@@ -168,15 +168,18 @@ def test_row_keys(spark):
 
 def test_df_from_iterable_schema_union_and_collapse(spark):
     records = [
-        ("k1", {"a": 1.0, "sub": {"x": 2.0, "y": 3.0}}),
+        ("k1", {"a": 1.0, "sub": {"x": 2.0, "y": 3.0, "z": None}}),
         ("k2", {"a": 4.0, "b": 5.0, "dropme": None}),
     ]
-    df = df_from_iterable(spark, records, key_col="key")
-    rows = {r["key"]: r.asDict() for r in df.collect()}
-    assert rows["k1"]["sub_x"] == 2.0 and rows["k1"]["sub_y"] == 3.0
-    assert rows["k1"]["b"] is None  # null backfill for missing field
-    assert rows["k2"]["b"] == 5.0
-    assert "dropme" not in df.columns  # None fields dropped
+    # Spark columns are flat, so 'multilevel' flattens like 'joined'
+    for collapse in ("joined", "multilevel"):
+        df = df_from_iterable(spark, records, key_col="key", collapse_subdict=collapse)
+        rows = {r["key"]: r.asDict() for r in df.collect()}
+        assert rows["k1"]["sub_x"] == 2.0 and rows["k1"]["sub_y"] == 3.0
+        assert rows["k1"]["b"] is None  # null backfill for missing field
+        assert rows["k2"]["b"] == 5.0
+        assert "dropme" not in df.columns  # None fields dropped
+        assert "sub_z" not in df.columns  # None sub-fields dropped
 
 
 def test_df_from_iterable_transform_skips(spark):
