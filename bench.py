@@ -1,7 +1,8 @@
 """Benchmark harness: run every registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print two
+JSON lines: a compact summary, then the full line {"metric": ...,
+"value": total_sec, "unit": "sec", "queries": {name: sec}, "failed": [...],
+"sf": ...}.
 
 Each query is timed end-to-end including the action: a write to Spark's
 built-in `noop` sink, which materializes EVERY output column without
@@ -57,30 +58,18 @@ def main() -> None:
         # i.e. query N's number partly measured queries 1..N-1.
         # reset_session_state makes the cleanup deterministic: blocking
         # unpersist, then GC + ContextCleaner drain, so neither leaked
-        # state nor a removal storm bleeds into the next query.
+        # state nor a removal storm bleeds into the next query. The
+        # unpersist covers EVERY persisted RDD, so a frame built on
+        # localCheckpoint that is still held fails if run again after the
+        # reset; this loop never reuses a frame, and query-scoped release
+        # (ROADMAP item 1) is the fix for callers that do.
         reset_session_state(spark)
         return elapsed
-
-    # optional comma-separated subset (debugging / incremental artifact
-    # top-ups); default runs the whole registry
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    subset = {q for q in only.split(",") if q} if only else None
-
-    # repeat>1 reruns each selected query and reports the LAST timing —
-    # the warm-session number. A single solo query otherwise pays the
-    # session's lazy init (codegen compile, Arrow runtime, Python worker
-    # spawn) that a 150-query session amortizes away, which inflates
-    # sub-second queries ~3-5x and would masquerade as a regression in
-    # solo-confirmation runs (scripts/bench_map.py sets this to 2).
-    repeat = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "1")))
 
     timings: dict[str, float] = {}
     failed: list[str] = []
     for name, (fn, _sql) in sorted(REGISTRY.items()):
-        if subset is not None and name not in subset:
-            continue
-        for _ in range(repeat):
-            t = run(fn, name)
+        t = run(fn, name)
         if t is None:
             failed.append(name)
         else:

@@ -684,14 +684,15 @@ def connected_components(
     with cluster = min id reachable. The dedup endgame: keep one doc per
     component.
 
-    The pair list is checkpointed once and its edge count picks one of
-    two tiers with identical output:
+    One bounded collect of at most ``_CC_DRIVER_MAX_EDGES + 1`` edges
+    picks one of two tiers with identical output:
 
-    - at or below ``_CC_DRIVER_MAX_EDGES`` edges: the edges are collected
-      and labeled by a driver union-find, returned as one literal frame;
-    - above it (or when an id is null): alternating large-star/small-star
-      edge rewriting (Kiveris et al., "Connected Components in MapReduce
-      and Beyond", SOCC'14) — each round rewrites the edge set itself
+    - at or below ``_CC_DRIVER_MAX_EDGES`` edges: the collected edges
+      are labeled by a driver union-find, returned as one literal frame;
+    - above it (or when an id is null): the pair list is checkpointed
+      once, then alternating large-star/small-star edge rewriting
+      (Kiveris et al., "Connected Components in MapReduce and Beyond",
+      SOCC'14) — each round rewrites the edge set itself
       toward a star per component, so the per-round shuffle SHRINKS as
       components collapse; converges in O(log n) rounds (the paper's
       Theorem 11 bound is O(log² n) worst-case, O(log n) in practice and
@@ -701,12 +702,14 @@ def connected_components(
     If the star loop exits via ``max_iterations`` without reaching a
     fixpoint, the labels would be wrong (unfinished propagation), so it
     raises RuntimeError."""
-    pairs = pairs.select(id_a, id_b).localCheckpoint(eager=True)
-    if pairs.count() <= _CC_DRIVER_MAX_EDGES:
-        rows = pairs.collect()
-        # null ids never occur in pair graphs; the star tier handles them
-        if not any(r[0] is None or r[1] is None for r in rows):
-            return _connected_components_driver(pairs, rows)
+    pairs = pairs.select(id_a, id_b)
+    rows = pairs.limit(_CC_DRIVER_MAX_EDGES + 1).collect()
+    # null ids never occur in pair graphs; the star tier handles them
+    if len(rows) <= _CC_DRIVER_MAX_EDGES and not any(
+        r[0] is None or r[1] is None for r in rows
+    ):
+        return _connected_components_driver(pairs, rows)
+    pairs = pairs.localCheckpoint(eager=True)
     return _connected_components_star(pairs, id_a, id_b, max_iterations)
 
 
@@ -1853,8 +1856,8 @@ def remove_repeated_spans(
     one sort task. The default threshold (1M docs) is deliberately at
     cluster-fatal size: measured at sf10 with a gram planted in 40% of
     docs (200k-doc frequency), the prefiltered window absorbs it FASTER
-    than splitting does (SCALE_TREND_R10_SPANS skew tiers), so the
-    split only pays for itself where a partition would outgrow an
+    than splitting does (measured over skew tiers), so the split only
+    pays for itself where a partition would outgrow an
     executor — and the absolute-df threshold means local corpora never
     trigger it while a 100 TB corpus' boilerplate does. Routing is
     advisory — either path computes exact doc-freqs, so sampling error
@@ -1904,9 +1907,9 @@ def remove_repeated_spans(
     # window — one full-stream shuffle keyed on the gram hash, with the
     # doc-freq (max dense_rank), keep-first owner (min id), and each
     # position's flag decision all local to that one sort. Measured at
-    # every local tier it beats the aggregate+join alternative ~3x
-    # (SCALE_TREND_R10_SPANS stage probes): the alternative shuffles the
-    # per-char stream twice, which is also what killed round 8 at sf100.
+    # every local tier it beats the aggregate+join alternative ~3x in
+    # per-stage probes: the alternative shuffles the per-char stream
+    # twice, which is also what killed round 8 at sf100.
     #
     # Its one scale hazard: a window partition can never be split (no
     # partial aggregation, and AQE skew handling applies to joins, not

@@ -216,7 +216,7 @@ def alignable_frame(df1: DataFrame, df2: DataFrame, key: str | Sequence[str] | N
     aggregate + a 1-row reduction, versus the previous 2 keyed
     aggregates + full-outer sort-merge join (the eqNullSafe join
     condition also defeated exchange reuse, so that shape paid 4
-    exchanges + 2 sorts — measured plan: plans/r11/alignable_*.txt).
+    exchanges + 2 sorts in its measured physical plan).
     GroupBy treats null keys as one group, matching pandas' NaN-label
     semantics the way the old null-safe join did; empty vs empty stays
     alignable via the coalesce defaults."""

@@ -479,10 +479,10 @@ def cms_heavy_hitters(
     Thresholds come in two regimes — pass exactly one of
     ``min_share``/``min_count``:
 
-    - ``min_share=φ`` (the RECOMMENDED form, measured in
-      SHUFFLE_AUDIT.json): "keys covering at least fraction φ of the
-      corpus". The decision threshold is ``ceil(φ·N)`` and the width is
-      ≈ 4/φ — a CONSTANT independent of data size
+    - ``min_share=φ`` (the RECOMMENDED form, measured to keep the build
+      shuffle task-bounded as rows grow): "keys covering at least
+      fraction φ of the corpus". The decision threshold is ``ceil(φ·N)``
+      and the width is ≈ 4/φ — a CONSTANT independent of data size
       (:func:`derive_cms_width_for_share`), so map-side partials stay
       dense over a fixed slot space and the sketch-build shuffle is
       bounded per task at ANY corpus size. This is how heavy hitters

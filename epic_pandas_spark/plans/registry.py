@@ -5869,9 +5869,9 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     The threshold is a SHARE (φ = 0.0005 of corpus rows, the streaming
     literature's φ-HH definition), not a fixed absolute: the share form
     keeps the sketch width at 4/φ — a CONSTANT (8192 here) at every
-    data size — so the build shuffle is task-bounded at 100 TB, closing
-    the round-6 SHUFFLE_AUDIT regime note where a fixed min_count grew
-    the width (and the build shuffle) with the data."""
+    data size — so the build shuffle is task-bounded at 100 TB, unlike
+    a fixed min_count, whose width (and build shuffle) grew with the
+    data."""
     from epic_pandas_spark.operators.sketches import cms_heavy_hitters
 
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey")

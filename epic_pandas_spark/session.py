@@ -144,10 +144,18 @@ def reset_session_state(spark: SparkSession) -> None:
 
     The buffer is reached via reflection (it is private); if the Spark
     version moved it, fall back to GC plus a short fixed sleep. No data
-    is cached across calls and nothing a future query needs is touched:
-    persisted RDDs, shuffles and broadcasts of FINISHED queries are
-    garbage by definition (a caller holding a live DataFrame reference
-    keeps its state alive — reachable objects are never enqueued)."""
+    is cached across calls.
+
+    Step 1 is not limited to finished queries: it unpersists EVERY
+    persisted RDD in the session, including the localCheckpoint blocks
+    of a DataFrame a caller still holds. Such a frame cannot be
+    recomputed — running it again after the reset fails with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (e.g. ``held =
+    spark.range(1000).localCheckpoint(eager=True)``, reset, then
+    ``held.count()``). Call this only between queries whose frames are
+    all dropped; releasing just one query's state (ROADMAP item 1) is
+    the fix. Steps 2-4 are safe for held frames: reachable shuffle and
+    broadcast state is never enqueued with the cleaner."""
     import gc as _pygc
 
     sc = spark.sparkContext

@@ -1,12 +1,11 @@
 """Full-registry correctness harness (VERDICT r2 item 8): run EVERY
 ``queries()`` entry against its ``oracle_sql()`` twin via DuckDB at a given
 scale factor — the same comparison the driver samples, but over the whole
-registry, with the JSON summary committed as in-repo evidence
-(ORACLE_CHECK.json).
+registry, with a JSON summary written to ``--out`` (ORACLE_CHECK.json).
 
 Usage:
     python scripts/oracle_check.py [--sf-dir /root/testdata/sf0.01] \
-        [--out ORACLE_CHECK.json] [--only name1,name2]
+        [--out ORACLE_CHECK.json]
 
 Compare semantics (mirrors the driver): column-name sets must be equal;
 row multisets compare order-insensitively with floats rounded to 6
@@ -48,7 +47,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--out", default="ORACLE_CHECK.json")
-    ap.add_argument("--only", default=None, help="comma-separated query names")
     args = ap.parse_args()
 
     import duckdb
@@ -62,7 +60,7 @@ def main() -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'")
 
     qs, oracles = registry.queries(), registry.oracle_sql()
-    names = sorted(qs) if not args.only else args.only.split(",")
+    names = sorted(qs)
     results, n_fail = {}, 0
     t_start = time.perf_counter()
     for name in names:
@@ -108,10 +106,6 @@ def main() -> int:
         "total_sec": round(time.perf_counter() - t_start, 1),
         "results": results,
     }
-    if args.only and args.out == "ORACLE_CHECK.json":
-        # a partial run must never clobber the committed full-registry
-        # artifact (the freshness gate requires artifact-n == registry-n)
-        args.out = "ORACLE_CHECK_PARTIAL.json"
     with open(args.out, "w") as f:
         json.dump(summary, f, indent=1, sort_keys=True)
     print(json.dumps({k: v for k, v in summary.items() if k != "results"}))

@@ -209,10 +209,12 @@ def test_connected_components_star_matches_minlabel(spark, monkeypatch):
 
 
 def test_connected_components_auto_crossover(spark, monkeypatch):
-    """The tier is chosen by the checkpointed edge count against
-    _CC_DRIVER_MAX_EDGES: a graph exactly at the bound stays on the
-    driver, one edge more runs the star rounds — identical labels either
-    way. Null ids fall through to the star tier."""
+    """The tier is chosen by one bounded collect of at most
+    _CC_DRIVER_MAX_EDGES + 1 edges: a graph exactly at the bound stays on
+    the driver, one edge more runs the star rounds — identical labels
+    either way. Null ids fall through to the star tier. On a
+    one-partition input the driver tier's decision and edge fetch are a
+    single Spark job (no eager checkpoint, no separate count)."""
     from epic_pandas_spark.extensions import dedup
 
     star_calls = []
@@ -223,10 +225,18 @@ def test_connected_components_auto_crossover(spark, monkeypatch):
     )
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
-    )
+    ).coalesce(1)
     want = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
     monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 3)
-    got = {r["id"]: r["cluster"] for r in dedup.connected_components(pairs).collect()}
+    sc = spark.sparkContext
+    group = "cc_driver_tier_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        labels = dedup.connected_components(pairs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+    got = {r["id"]: r["cluster"] for r in labels.collect()}
     assert got == want and star_calls == []
     monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 2)
     got = {r["id"]: r["cluster"] for r in dedup.connected_components(pairs).collect()}
